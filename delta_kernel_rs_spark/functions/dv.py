@@ -314,7 +314,7 @@ def dv_diff_from_df(desc_df, table_path: str):
     hundreds of millions of indexes per file on a 100 TB table) are only
     ever materialized inside executor workers — the driver never sees a
     row index (reference resolves DV sibling pairs the same way,
-    table_changes/resolve_dvs.rs; scan twin: deleted_rows_df below).
+    table_changes/resolve_dvs.rs; scan twin: deleted_rows_from_desc_df).
     """
     from collections.abc import Iterator
 
@@ -466,24 +466,3 @@ def dv_blobs_from_hits_df(hits_df, table_path: str):
     return hits_df.groupBy("__file_path").applyInPandas(
         build, "file_path STRING, blob BINARY, cardinality LONG"
     )
-
-
-def deleted_rows_df(spark, files, table_path: str):
-    """List-fed twin of :func:`deleted_rows_from_desc_df` for callers that
-    already hold a bounded ScanFile list (delete rewrite, cached scans)."""
-    desc_rows = [
-        (
-            f.path,
-            f.dv.get("storageType"),
-            f.dv.get("pathOrInlineDv"),
-            f.dv.get("offset"),
-        )
-        for f in files
-        if f.dv
-    ]
-    desc_df = spark.createDataFrame(
-        desc_rows,
-        "dv_file_path STRING, storage_type STRING, path_or_inline STRING,"
-        " offset LONG",
-    ).repartition(max(1, min(len(desc_rows), 64)))
-    return deleted_rows_from_desc_df(desc_df, table_path)

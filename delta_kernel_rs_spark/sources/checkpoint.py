@@ -52,18 +52,23 @@ def _full_replay(snapshot: Snapshot) -> DataFrame:
     the scan replay, but keeping remove tombstones too."""
     spark = snapshot.spark
     seg = snapshot.log_segment
-    scan = snapshot.scan()
     arms = []
     if seg.commit_files:
         from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
 
         raw = spark.read.schema(SCAN_ACTIONS_SCHEMA).option("mode", "FAILFAST").json([c.path for c in seg.commit_files])
+        # (log filename -> version); a compacted file's actions take its
+        # range end (they are already newest-wins-reconciled for the range)
+        version_map = spark.createDataFrame(
+            [(c.filename, c.end_version if c.end_version is not None else c.version) for c in seg.commit_files],
+            "log_filename STRING, version LONG",
+        )
         arms.append(
             raw.withColumn(
                 "log_filename",
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
             )
-            .join(F.broadcast(scan._version_map_df()), "log_filename")
+            .join(F.broadcast(version_map), "log_filename")
             .select("add", "remove", "version")
         )
     if seg.checkpoint_parts:

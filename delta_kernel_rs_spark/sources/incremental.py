@@ -5,146 +5,127 @@ incremental_scan/mod.rs:1-60) and hint-based refresh
 (``scan_metadata_from``, kernel/src/scan/mod.rs:880-1024): a repeated
 reader (dashboard refresh, streaming source, cached scan state) replays
 only the commits newer than its base version instead of the whole log.
+The diff comes from the single-node replay (sources/pyreplay.py), the
+same one every ``Scan`` plans from.
 
 Semantics (reference contract):
-- the diff covers commits in ``(base_version, target_version]`` from the
-  target snapshot's already-validated commit list — no re-listing;
+- the diff covers commits in ``(base_version, target_version]``;
 - newest-wins dedup per FileActionKey(path, dv_unique_id) *within the
-  range*; live adds may be stats-pruned by a predicate, removes are always
-  reported (consumers must drop stale cache entries);
-- if the snapshot's commit list cannot serve the range (checkpoint or
-  compacted commits cover part of it), the caller falls back to a full
-  scan — we return ``None`` exactly then.
+  range*; removes are always reported (consumers must drop stale cache
+  entries);
+- if the range's commits are gone from the log, the caller falls back to
+  a full scan — we return ``None`` exactly then.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
-from delta_kernel_rs_spark.sources.scan import (
-    ScanFile,
-    absolutize_decoded_path,
-    canonical_log_path,
-    dv_unique_id,
+from delta_kernel_rs_spark.sources.delta_paths import LogFileKind, parse_log_filename
+from delta_kernel_rs_spark.sources.pyreplay import (
+    _adds_from_pylist,
+    _dv_uid_py,
+    merge_tail,
+    replay_commit_tail,
+    tail_adds_arrow,
 )
+from delta_kernel_rs_spark.sources.scan import (
+    LiveKey,
+    ScanFile,
+    absolute_paths,
+    dv_unique_id,
+    live_files_frame,
+    scan_files_arrow,
+    scan_files_list,
+)
+
+_REMOVE_FIELDS = ("path", "size", "partitionValues", "deletionVector")
+
+
+def _range_commits(snapshot, base_version: int) -> list | None:
+    """Plain commit files for ``(base, target]``, ascending; None when the
+    range is not servable.
+
+    The target's commit list serves it when its plain commits cover the
+    range. A checkpoint or compacted file above part of the range leaves
+    the raw commit JSONs readable on disk until log cleanup, so they are
+    listed (the reference's scan_metadata_from builds its range segment
+    independently of the target's checkpoint). Only a range with
+    genuinely missing commits is unservable."""
+    target = snapshot.version
+    if base_version >= target:
+        raise ValueError(f"base version {base_version} must be < target version {target}")
+    want = list(range(base_version + 1, target + 1))
+    by_version = {
+        c.version: c
+        for c in snapshot.log_segment.commit_files
+        if c.version > base_version and c.end_version is None
+    }
+    if sorted(by_version) != want:
+        for e in snapshot.storage.list_dir(f"{snapshot.table_path}/_delta_log"):
+            p = parse_log_filename(e.path)
+            if p is not None and p.kind == LogFileKind.COMMIT and base_version < p.version <= target:
+                by_version.setdefault(p.version, p)
+        if sorted(by_version) != want:
+            return None
+    return [by_version[v] for v in want]
+
+
+def _range_tail(snapshot, base_version: int) -> dict | None:
+    commits = _range_commits(snapshot, base_version)
+    return None if commits is None else replay_commit_tail(snapshot.storage, commits)
 
 
 def incremental_actions_df(snapshot, base_version: int) -> DataFrame | None:
-    """Latest add/remove per file key across ``(base, target]`` commits.
-
-    Returns None when the range is not servable from the snapshot's commit
-    list (caller falls back to a full scan). Output columns: ``action``
-    ('add'|'remove'), the scan-file columns, and ``commit_version``.
-    """
-    target = snapshot.version
-    if base_version >= target:
-        raise ValueError(
-            f"base version {base_version} must be < target version {target}"
-        )
-    seg = snapshot.log_segment
-    commits = [
-        c for c in seg.commit_files if c.version > base_version and c.end_version is None
+    """Latest add/remove per file key across ``(base, target]`` commits,
+    or None when the range is not servable. Columns: ``action``
+    ('add'|'remove'), the ``scan_files_df`` columns, and ``key_dv`` (the
+    DV half of the file key)."""
+    tail = _range_tail(snapshot, base_version)
+    if tail is None:
+        return None
+    # a remove reports no mtime, stats or row-tracking fields
+    rows = [
+        (v, a if is_add else {k: a.get(k) for k in _REMOVE_FIELDS}, is_add, uid)
+        for (_, uid), (v, a, is_add) in tail.items()
     ]
-    # Servability: plain commits must cover exactly base+1..target. A
-    # compacted entry straddling the base would replay pre-base actions.
-    want = list(range(base_version + 1, target + 1))
-    by_version = {c.version: (c.filename, c.path) for c in commits}
-    if sorted(by_version) != want:
-        # The segment is checkpoint-anchored above part of the range, but
-        # the raw commit JSONs stay readable on disk until log cleanup —
-        # list them (the reference's scan_metadata_from builds its range
-        # segment independently of the target's checkpoint). Only a range
-        # with genuinely missing commits is unservable.
-        from delta_kernel_rs_spark.sources.storage import storage_for
+    diff = scan_files_arrow(
+        _adds_from_pylist([r[1] for r in rows], [r[0] for r in rows]), snapshot.table_path
+    )
+    diff = diff.add_column(
+        0, "action", pa.array(["add" if r[2] else "remove" for r in rows], pa.string())
+    ).append_column("key_dv", pa.array([r[3] for r in rows], pa.string()))
+    return snapshot.spark.createDataFrame(diff)
 
-        storage = storage_for(snapshot.spark, snapshot.table_path)
-        log_dir = f"{snapshot.table_path}/_delta_log"
-        for e in storage.list_dir(log_dir):
-            name = e.path.rsplit("/", 1)[-1]
-            if name.endswith(".json") and name[:-5].isdigit():
-                v = int(name[:-5])
-                if base_version < v <= target:
-                    by_version.setdefault(v, (name, e.path))
-        if sorted(by_version) != want:
-            return None
 
-    spark = snapshot.spark
-    version_map = spark.createDataFrame(
-        [(by_version[v][0], v) for v in want], "log_filename STRING, version LONG"
-    )
-    raw = (
-        spark.read.schema(SCAN_ACTIONS_SCHEMA)
-        .option("mode", "FAILFAST")
-        .json([by_version[v][1] for v in want])
-    )
-    keyed = (
-        raw.withColumn(
-            "log_filename", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        )
-        .join(F.broadcast(version_map), "log_filename")
-        .filter(F.col("add").isNotNull() | F.col("remove").isNotNull())
-        .select(
-            # decoded file identity — mixed percent-encodings across the
-            # range's commits must collapse to one key (canonical_log_path)
-            canonical_log_path(
-                F.coalesce(F.col("add.path"), F.col("remove.path"))
-            ).alias("key_path"),
-            F.when(F.col("add").isNotNull(), dv_unique_id(F.col("add.deletionVector")))
-            .otherwise(dv_unique_id(F.col("remove.deletionVector")))
-            .alias("key_dv"),
-            "add",
-            "remove",
-            "version",
-        )
-    )
-    latest = (
-        keyed.groupBy("key_path", "key_dv")
-        .agg(F.max_by(F.struct("version", "add", "remove"), F.col("version")).alias("w"))
-        .select(
-            "key_path",
-            "key_dv",
-            F.col("w.version").alias("commit_version"),
-            F.col("w.add").alias("add"),
-            F.col("w.remove").alias("remove"),
-        )
-    )
-    table_path = snapshot.table_path
-    # key_path is already decoded — absolutize only (a second url_decode
-    # would mangle a file literally named like an escape, e.g. '100%25')
-    abs_path = absolutize_decoded_path(F.col("key_path"), table_path)
-    return latest.select(
-        F.when(F.col("add").isNotNull(), F.lit("add")).otherwise(F.lit("remove")).alias(
-            "action"
-        ),
-        abs_path.alias("file_path"),
-        F.col("key_dv"),
-        F.coalesce(F.col("add.size"), F.col("remove.size")).alias("size"),
-        F.col("add.modificationTime").alias("modification_time"),
-        F.col("add.stats").alias("stats"),
-        F.coalesce(F.col("add.partitionValues"), F.col("remove.partitionValues")).alias(
-            "partition_values"
-        ),
-        F.coalesce(F.col("add.deletionVector"), F.col("remove.deletionVector")).alias(
-            "deletion_vector"
-        ),
-        F.col("add.baseRowId").alias("base_row_id"),
-        F.col("add.defaultRowCommitVersion").alias("default_row_commit_version"),
-        "commit_version",
-    )
+def refresh_live_files(snapshot, base_version: int, base_key: LiveKey, base_table: pa.Table):
+    """``scan_metadata_from`` over the engine's own cached live table for
+    ``(table, base)``: the target's live table is the base's plus the
+    replayed ``(base, target]`` commits, installed in the cache as the
+    target snapshot's own (so its lifted frame is what a fresh scan of
+    the target returns). None unless that equals a fresh replay of the
+    target's segment: the same checkpoint, and plain commits only."""
+    seg = snapshot.log_segment
+    if seg.checkpoint_version != base_key.checkpoint_version or any(
+        c.end_version is not None for c in seg.commit_files
+    ):
+        return None
+    older = [c for c in seg.commit_files if c.version <= base_version]
+    newer = [c for c in seg.commit_files if c.version > base_version]
+    if len(older) != base_key.commit_files or [c.version for c in newer] != list(
+        range(base_version + 1, snapshot.version + 1)
+    ):
+        return None
+    tail = replay_commit_tail(snapshot.storage, newer)
+    return live_files_frame(snapshot, merge_tail(base_table, tail))
 
 
 def refresh_scan_files_df(snapshot, base_version: int, prior_df: DataFrame):
-    """Frame-shaped ``scan_metadata_from``: merge a prior scan-files frame
-    with the ``(base, target]`` diff, entirely in-plan.
-
-    ``prior_df`` is the base-version scan's ``scan_files_df()`` (or any
-    frame with that schema — typically the persisted live-adds projection,
-    so the merge costs one replay of only the NEW commits). The reference
-    passes prior state as columnar batches, not heap objects
-    (kernel/src/scan/mod.rs:880-1024); this is the DataFrame equivalent —
-    the driver never materializes either file list.
+    """Frame-shaped ``scan_metadata_from`` for any prior scan-files frame
+    (e.g. a predicate-filtered one): merge it with the ``(base, target]``
+    diff in-plan, so the driver never materializes either file list.
 
     Merge rule (newest-wins): any key touched by the diff supersedes the
     prior entry — removes drop it, adds replace it. The diff is already
@@ -176,65 +157,18 @@ def refresh_scan_files(
     snapshot, base_version: int, prior_files: list[ScanFile]
 ) -> list[ScanFile] | None:
     """List-shaped ``scan_metadata_from`` for callers that hold a
-    ``files()``-style list (the reference's public scan-metadata iterator).
-
-    Internally frame-shaped: the prior list becomes a DataFrame, the merge
-    runs in-plan via :func:`refresh_scan_files_df`, and only the final
-    bounded result is collected — no driver-side dict merge.
-    """
+    ``files()``-style list (the reference's public scan-metadata iterator):
+    prior files whose key the range touched drop out, the range's live
+    adds join. No Spark job."""
     if base_version == snapshot.version:
         return list(prior_files)
-    prior_df = scan_files_list_to_df(snapshot.spark, prior_files)
-    merged = refresh_scan_files_df(snapshot, base_version, prior_df)
-    if merged is None:
+    tail = _range_tail(snapshot, base_version)
+    if tail is None:
         return None
-    return [
-        ScanFile(
-            path=r.file_path,
-            size=r.size,
-            partition_values=dict(r.partition_values or {}),
-            dv=r.deletion_vector.asDict() if r.deletion_vector else None,
-            base_row_id=r.base_row_id,
-            commit_version=r.commit_version,
-            default_row_commit_version=r.default_row_commit_version,
-        )
-        for r in merged.drop("stats", "modification_time").collect()
-    ]
-
-
-def scan_files_list_to_df(spark, files: list[ScanFile]) -> DataFrame:
-    """Lift a collected ScanFile list back into the scan-files frame shape
-    (stats/mtime null — the cached list never carries them)."""
-    from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA as _S
-
-    dv_type = _S["add"].dataType["deletionVector"].dataType
-    import pyspark.sql.types as T
-
-    struct = T.StructType(
-        [
-            T.StructField("file_path", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("modification_time", T.LongType()),
-            T.StructField("stats", T.StringType()),
-            T.StructField("partition_values", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("deletion_vector", dv_type),
-            T.StructField("base_row_id", T.LongType()),
-            T.StructField("default_row_commit_version", T.LongType()),
-            T.StructField("commit_version", T.LongType()),
-        ]
-    )
-    rows = [
-        (
-            f.path,
-            f.size,
-            None,
-            None,
-            f.partition_values or {},
-            f.dv,
-            f.base_row_id,
-            f.default_row_commit_version,
-            f.commit_version,
-        )
-        for f in files
-    ]
-    return spark.createDataFrame(rows, struct)
+    items = list(tail.items())
+    touched_paths = absolute_paths(
+        pa.array([a["path"] for _, (_, a, _) in items], pa.string()), snapshot.table_path
+    ).to_pylist()
+    touched = {(p, uid) for p, ((_, uid), _) in zip(touched_paths, items)}
+    kept = [f for f in prior_files if (f.path, _dv_uid_py(f.dv)) not in touched]
+    return kept + scan_files_list(scan_files_arrow(tail_adds_arrow(tail), snapshot.table_path))

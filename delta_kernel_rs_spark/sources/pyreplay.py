@@ -1,23 +1,29 @@
-"""SparkSession-free log replay producing an Arrow live-file list.
+"""Single-node log replay: the Delta log as an Arrow live-file table.
 
-The PySpark Python Data Source API executes ``schema()`` and
-``partitions()`` in a plain Python worker process with no SparkSession,
-so the batch facade (sources/batch_source.py) replays the Delta log the
-way the reference kernel itself does — single-node, newest-wins dedup
-over the commit tail (kernel/src/log_replay/mod.rs:28-56), checkpoint
-bulk consumed columnar (kernel's parallel checkpoint iterators):
+This is the engine's one log -> live-files replay. ``Scan``
+(sources/scan.py) caches its table per snapshot, reads file lists
+straight from it and lifts it into a DataFrame once for the consumers
+that need one distributed (DML, CDF, the constants/DV joins of
+``to_df``); the batch facade and the streaming sources run it in plain
+Python workers with no SparkSession. It replays the way the reference
+kernel does — single-node, newest action per (path, dv-uid) key wins,
+memory O(seen file keys) (kernel/src/log_replay/mod.rs:28-66):
 
 * the commit TAIL (everything after the checkpoint, bounded by the
   table's checkpoint cadence) is parsed as JSON into Python dicts;
 * the CHECKPOINT — where the O(files) bulk lives — is read with pyarrow
   and stays columnar end-to-end: dedup against tail keys is an Arrow
-  ``is_in`` anti-filter, and the result ships to executors as Arrow IPC
-  slices. No per-file Python objects are ever materialized for
-  checkpoint files.
+  ``is_in`` anti-filter. No per-file Python objects are ever
+  materialized for checkpoint files;
+* an incremental refresh applies a newer commit range to an older live
+  table with the same anti-filter (:func:`merge_tail`), the reference's
+  ``scan_metadata_from``.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import urllib.parse
 
@@ -44,6 +50,10 @@ FILES_SCHEMA = pa.schema(
         ("dv", DV_TYPE),
         ("base_row_id", pa.int64()),
         ("default_row_commit_version", pa.int64()),
+        ("modification_time", pa.int64()),
+        # version of the log file that carried the add: a compacted file's
+        # end version, the checkpoint version for checkpoint rows
+        ("commit_version", pa.int64()),
         # raw add.stats JSON — drives planning-time file skipping in the
         # facade (plans/py_skipping.py); dropped before tasks ship to
         # executors so checkpoint-sized stats bulk never rides the IPC
@@ -65,7 +75,9 @@ def pq_read(path: str, columns: list[str] | None = None, filters=None) -> pa.Tab
     return pq.read_table(path.removeprefix("file://"), columns=columns, filters=filters)
 
 
-def _iter_actions(storage, commit_path: str):
+def _iter_actions(storage, commit_path: str, strict: bool = False):
+    """Actions of one NDJSON log file; ``strict`` (the replay) fails loudly
+    on a torn line instead of skipping it."""
     for line in storage.read_text(commit_path).splitlines():
         line = line.strip()
         if not line:
@@ -73,6 +85,8 @@ def _iter_actions(storage, commit_path: str):
         try:
             yield json.loads(line)
         except ValueError:
+            if strict:
+                raise ValueError(f"malformed action line in {commit_path}") from None
             continue
 
 
@@ -151,36 +165,51 @@ def _dv_uid_py(dv: dict | None) -> str:
     )
 
 
-def replay_commit_tail(storage, seg) -> dict[tuple[str, str], dict | None]:
-    """Newest-wins file actions from the commit tail: key → live add dict,
-    or None when the newest action is a remove. Python-dict sized by the
-    tail only (checkpoint cadence), never the full table."""
-    actions: dict[tuple[str, str], dict | None] = {}
-    for c in seg.commit_files:  # ascending — later commits overwrite
-        for action in _iter_actions(storage, c.path):
+def replay_commit_tail(storage, commits) -> dict[tuple[str, str], tuple]:
+    """Newest-wins file actions from ``commits`` (ascending commit-list
+    entries, e.g. ``seg.commit_files``): key -> ``(version, action,
+    is_add)``. Python-dict sized by the range only (checkpoint cadence,
+    or a refresh's new commits), never the full table."""
+    actions: dict[tuple[str, str], tuple] = {}
+    for c in commits:  # ascending — later commits overwrite
+        # a compacted file's actions are reconciled through its end version
+        v = c.end_version if getattr(c, "end_version", None) is not None else c.version
+        for action in _iter_actions(storage, c.path, strict=True):
             if "add" in action:
                 a = action["add"]
-                actions[(_unq(a["path"]), _dv_uid_py(a.get("deletionVector")))] = a
+                actions[(_unq(a["path"]), _dv_uid_py(a.get("deletionVector")))] = (v, a, True)
             elif "remove" in action:
                 r = action["remove"]
-                actions[(_unq(r["path"]), _dv_uid_py(r.get("deletionVector")))] = None
+                actions[(_unq(r["path"]), _dv_uid_py(r.get("deletionVector")))] = (v, r, False)
     return actions
 
 
-def _adds_from_pylist(adds: list[dict]) -> pa.Table:
-    rows = [
-        {
-            "path": a["path"],
-            "size": a.get("size"),
-            "partition_values": list((a.get("partitionValues") or {}).items()),
-            "dv": a.get("deletionVector"),
-            "base_row_id": a.get("baseRowId"),
-            "default_row_commit_version": a.get("defaultRowCommitVersion"),
-            "stats": a.get("stats"),
-        }
-        for a in adds
-    ]
-    return pa.Table.from_pylist(rows, schema=FILES_SCHEMA)
+#: add-action key behind each FILES_SCHEMA column read straight from JSON
+_ADD_KEYS = {
+    "path": "path",
+    "size": "size",
+    "dv": "deletionVector",
+    "base_row_id": "baseRowId",
+    "default_row_commit_version": "defaultRowCommitVersion",
+    "modification_time": "modificationTime",
+    "stats": "stats",
+}
+
+
+def _adds_from_pylist(adds: list[dict], versions: list | None = None) -> pa.Table:
+    """Add-action dicts as a FILES_SCHEMA table, built column by column."""
+    cols = {name: [a.get(key) for a in adds] for name, key in _ADD_KEYS.items()}
+    cols["partition_values"] = [list((a.get("partitionValues") or {}).items()) for a in adds]
+    cols["commit_version"] = versions or [None] * len(adds)
+    return pa.Table.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in FILES_SCHEMA], schema=FILES_SCHEMA
+    )
+
+
+def tail_adds_arrow(tail: dict) -> pa.Table:
+    """The live adds of a :func:`replay_commit_tail` result."""
+    live = [(v, a) for v, a, is_add in tail.values() if is_add]
+    return _adds_from_pylist([a for _, a in live], [v for v, _ in live])
 
 
 def _as_array(x):
@@ -213,9 +242,8 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
             if a.get("sidecar", {}).get("path")
         ]
         if not sidecars:
-            return _adds_from_pylist(
-                [a["add"] for a in actions if a.get("add", {}).get("path")]
-            )
+            adds = [a["add"] for a in actions if a.get("add", {}).get("path")]
+            return _adds_from_pylist(adds, [seg.checkpoint_version] * len(adds))
         resolved = [
             p if "://" in p or p.startswith("/") else f"{seg.log_dir}/_sidecars/{p}"
             for p in sidecars
@@ -223,7 +251,7 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
         top = pa.concat_tables(
             [pq_read(p) for p in resolved], promote_options="permissive"
         )
-        return _conform_checkpoint_table(top)
+        return _conform_checkpoint_table(top, seg.checkpoint_version)
     top = pa.concat_tables(
         [pq_read(p) for p in seg.checkpoint_parts], promote_options="permissive"
     )
@@ -238,11 +266,44 @@ def _checkpoint_adds_arrow(seg, storage=None) -> pa.Table:
             top = pa.concat_tables(
                 [pq_read(p) for p in resolved], promote_options="permissive"
             )
-    return _conform_checkpoint_table(top)
+    return _conform_checkpoint_table(top, seg.checkpoint_version)
 
 
-def _conform_checkpoint_table(top: pa.Table) -> pa.Table:
-    """Normalize resolved checkpoint rows (post-sidecar) to FILES_SCHEMA."""
+def _stats_json(v) -> str:
+    """Spark ``to_json`` rendering of one ``stats_parsed`` value: null
+    fields dropped, timestamps at millisecond precision, decimals as exact
+    numbers (a rounded min or max bound could skip a matching file)."""
+    if isinstance(v, dict):
+        items = (f"{json.dumps(k)}:{_stats_json(x)}" for k, x in v.items() if x is not None)
+        return "{" + ",".join(items) + "}"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (int, decimal.Decimal)):
+        return str(v)
+    if isinstance(v, datetime.datetime):
+        zone = ""
+        if v.tzinfo is not None:
+            v, zone = v.astimezone(datetime.timezone.utc), "Z"
+        return f'"{v.strftime("%Y-%m-%dT%H:%M:%S")}.{v.microsecond // 1000:03d}{zone}"'
+    if isinstance(v, datetime.date):
+        return f'"{v.isoformat()}"'
+    return json.dumps(v)  # str, float (NaN/Infinity as Spark's reader accepts)
+
+
+def _stats_column(add: pa.Array, n: int) -> pa.Array:
+    """``add.stats``; where a writeStatsAsStruct checkpoint nulled the JSON
+    document (writeStatsAsJson=false) it is re-derived from
+    ``stats_parsed``, so file skipping keeps working."""
+    stats = _struct_subfield(add, "stats", pa.string(), n)
+    if "stats_parsed" not in {f.name for f in add.type}:
+        return stats
+    parsed = pc.struct_field(add, "stats_parsed").to_pylist()
+    return pc.coalesce(stats, pa.array([None if p is None else _stats_json(p) for p in parsed], pa.string()))
+
+
+def _conform_checkpoint_table(top: pa.Table, version: int | None) -> pa.Table:
+    """Normalize resolved checkpoint rows (post-sidecar) to FILES_SCHEMA;
+    every row's ``commit_version`` is the checkpoint's ``version``."""
     if "add" not in top.column_names:
         return FILES_SCHEMA.empty_table()
     add = top.column("add").combine_chunks()
@@ -266,7 +327,9 @@ def _conform_checkpoint_table(top: pa.Table) -> pa.Table:
         dv,
         _struct_subfield(add, "baseRowId", pa.int64(), n),
         _struct_subfield(add, "defaultRowCommitVersion", pa.int64(), n),
-        _struct_subfield(add, "stats", pa.string(), n),
+        _struct_subfield(add, "modificationTime", pa.int64(), n),
+        pa.array([version] * n, pa.int64()),
+        _stats_column(add, n),
     ]
     return pa.Table.from_arrays(cols, schema=FILES_SCHEMA)
 
@@ -298,25 +361,29 @@ def _arrow_keys(tbl: pa.Table) -> pa.Array:
     return pc.binary_join_element_wise(paths, uid, "\x00")
 
 
-def live_files_arrow(storage, seg) -> pa.Table:
-    """The snapshot's live files as one Arrow table (FILES_SCHEMA).
-
-    Same dedup semantics as the distributed replay (sources/scan.py
-    add_actions_df): newest tail action wins per (path, dv-uid) key;
-    checkpoint files survive unless ANY tail action touched their key.
-    """
-    tail = replay_commit_tail(storage, seg)
-    live_tail = _adds_from_pylist([a for a in tail.values() if a is not None])
-    if not seg.checkpoint_parts:
-        return live_tail
-    ck = _checkpoint_adds_arrow(seg, storage)
-    if ck.num_rows and tail:
+def merge_tail(older: pa.Table, tail: dict) -> pa.Table:
+    """``older`` (a checkpoint's adds, or a base snapshot's live table)
+    with a newer commit range's :func:`replay_commit_tail` applied: an
+    older row survives unless ANY range action touched its key, and the
+    range's live adds join it."""
+    live_tail = tail_adds_arrow(tail)
+    if older.num_rows and tail:
         tail_keys = pa.array(
             ["\x00".join([p, uid]) for (p, uid) in tail], type=pa.string()
         )
-        mask = pc.invert(pc.is_in(_arrow_keys(ck), value_set=tail_keys))
-        ck = ck.filter(mask)
-    return pa.concat_tables([live_tail, ck]) if live_tail.num_rows else ck
+        mask = pc.invert(pc.is_in(_arrow_keys(older), value_set=tail_keys))
+        older = older.filter(mask)
+    return pa.concat_tables([live_tail, older]) if live_tail.num_rows else older
+
+
+def live_files_arrow(storage, seg) -> pa.Table:
+    """The snapshot's live files as one Arrow table (FILES_SCHEMA): newest
+    tail action wins per (path, dv-uid) key; checkpoint files survive
+    unless ANY tail action touched their key."""
+    tail = replay_commit_tail(storage, seg.commit_files)
+    if not seg.checkpoint_parts:
+        return tail_adds_arrow(tail)
+    return merge_tail(_checkpoint_adds_arrow(seg, storage), tail)
 
 
 def bin_pack_by_size(tbl: pa.Table, target_bytes: int) -> list[pa.Table]:

@@ -1,71 +1,219 @@
-"""Table scan: distributed log replay → live file list → logical DataFrame.
+"""Table scan: the snapshot's live files -> a logical DataFrame.
 
-The metadata query is the reference's flagship declarative plan
-(kernel/src/plans/mod.rs:16-25, built at kernel/src/scan/scan_plan.rs:49-80):
+The live-file list comes from the single-node Arrow replay
+(sources/pyreplay.py), the reference's own shape: the newest action per
+``file_key = (path, dv_unique_id)`` wins, and checkpoint rows survive
+unless a commit-tail action touched their key (kernel/src/log_replay/
+mod.rs:28-66). Each snapshot's Arrow table is cached once
+(``_LIVE_ADDS_CACHE``) and is the source of everything a scan plans from:
 
-    SELECT add FROM (SELECT max_by(action, version) AS add
-                     FROM commits GROUP BY file_key)
-    WHERE add IS NOT NULL
-    UNION ALL
-    SELECT c.add FROM checkpoint c
-    LEFT ANTI JOIN commit_keys k ON c.file_key = k.file_key
+* ``files()`` and the path / has-DV list of ``to_df()`` read the table
+  directly — no Spark job, no row collect;
+* ``scan_files_df()`` lifts the table once into a DataFrame for
+  the consumers that need the file list distributed: DML, CDF, the
+  constants / DV / row-id joins of ``to_df`` and the Column filter of
+  data skipping (plans/data_skipping.py).
 
-with ``file_key = (path, dv_unique_id)`` (kernel/src/log_replay/mod.rs:28-56)
-— here lowered to DataFrame ops so the replay runs distributed on executors
-(the reference's streaming ``AddRemoveDedupVisitor`` becomes a shuffle
-aggregate; its ``parallel_scan_metadata`` checkpoint parallelism is free).
-
-Scale notes (100 TB posture): the replay never materializes the log on the
-driver — only the final live-file *path list* is collected (exactly what
-Spark's own parquet source needs); partition values / DV descriptors stay
-distributed and are joined back against ``_metadata.file_path``.
+Spark's parquet source needs the path list on the driver; partition
+values, DV descriptors and row-id constants stay in the lifted frame and
+are joined back against ``_metadata.file_path``.
 """
 
 from __future__ import annotations
 
+import functools
 from collections import OrderedDict
 from dataclasses import dataclass
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from delta_kernel_rs_spark.functions.partition_codec import parse_partition_column
 from delta_kernel_rs_spark.functions.schema_codec import physical_name, quoted
-from delta_kernel_rs_spark.sources.actions import SCAN_ACTIONS_SCHEMA
+from delta_kernel_rs_spark.sources.pyreplay import DV_TYPE, FILES_SCHEMA, _unq, live_files_arrow
+
+@dataclass
+class _CacheEntry:
+    """One cached, immutable snapshot-derived file set: the replay's Arrow
+    table (None for frame-only, persisted entries such as CDF events) and
+    the DataFrame lifted from it (None until first asked for)."""
+
+    table: pa.Table | None = None
+    frame: DataFrame | None = None
 
 
-#: persisted live-adds frames, one per (session, table, version); small
-#: LRU — evictees are unpersisted (see Scan.cached_add_actions_df).
-_LIVE_ADDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-# Adds frames are metadata-sized and persist MEMORY_AND_DISK (spill, not
-# OOM, on million-file tables); an 8-entry cache thrashes on workloads
-# that touch tens of tables per session — every query paid the persist
-# without ever reusing it.
+class LiveKey(NamedTuple):
+    """Cache key of one snapshot's live files: everything the replay
+    result depends on (application, table, version, segment shape)."""
+
+    app: str
+    table_path: str
+    version: int
+    checkpoint_version: int | None
+    commit_files: int
+
+
+#: One LRU for every cached file set.
+_LIVE_ADDS_CACHE: "OrderedDict[tuple, _CacheEntry]" = OrderedDict()
+# an 8-entry cache thrashed on workloads that touch tens of tables per
+# session — every query paid the replay without ever reusing it
 _LIVE_ADDS_CACHE_MAX = 64
+#: Bound on the Arrow tables the cache holds in driver memory: they
+#: cannot spill to disk, so the oldest entries go once their total passes
+#: it (the newest entry always stays).
+_LIVE_ADDS_CACHE_MAX_BYTES = 1 << 30
+
+
+def _nbytes(entry: _CacheEntry) -> int:
+    return entry.table.nbytes if entry.table is not None else 0
+
+
+def _cache_get(key: tuple) -> _CacheEntry | None:
+    entry = _LIVE_ADDS_CACHE.get(key)
+    if entry is not None:
+        _LIVE_ADDS_CACHE.move_to_end(key)
+    return entry
+
+
+def _cache_put(key: tuple, entry: _CacheEntry) -> None:
+    """Insert as newest; evictees drop their Arrow table and frame
+    (unpersisting it)."""
+    _LIVE_ADDS_CACHE[key] = entry
+    _LIVE_ADDS_CACHE.move_to_end(key)
+    total = sum(map(_nbytes, _LIVE_ADDS_CACHE.values()))
+    while len(_LIVE_ADDS_CACHE) > 1 and (
+        len(_LIVE_ADDS_CACHE) > _LIVE_ADDS_CACHE_MAX or total > _LIVE_ADDS_CACHE_MAX_BYTES
+    ):
+        _, old = _LIVE_ADDS_CACHE.popitem(last=False)
+        total -= _nbytes(old)
+        if old.frame is not None:
+            try:
+                old.frame.unpersist()
+            except Exception:  # session already stopped
+                pass
+        old.table = old.frame = None
 
 
 def cached_files_frame(key: tuple, builder) -> DataFrame:
-    """Persist-and-reuse a metadata-sized frame under a stable LRU key.
+    """Persist-and-reuse a metadata-sized frame that no Arrow table backs
+    (CDF events) under a stable LRU key: the first caller persists, later
+    callers share the SAME persisted DataFrame object. Keys must pin
+    everything the frame depends on (application, table, version range,
+    checkpoint shape)."""
+    entry = _cache_get(key)
+    if entry is None or entry.frame is None:
+        entry = _CacheEntry(frame=builder().persist())
+        _cache_put(key, entry)
+    return entry.frame
 
-    One code path for every immutable snapshot-derived frame (live adds,
-    incremental merges): the first caller persists, later callers with
-    the same key share the SAME persisted DataFrame object; evictees are
-    unpersisted. Keys must pin everything the frame depends on
-    (application, table, version range, checkpoint shape)."""
-    df = _LIVE_ADDS_CACHE.get(key)
-    if df is not None:
-        _LIVE_ADDS_CACHE.move_to_end(key)
-        return df
-    df = builder().persist()
-    _LIVE_ADDS_CACHE[key] = df
-    while len(_LIVE_ADDS_CACHE) > _LIVE_ADDS_CACHE_MAX:
-        _, old = _LIVE_ADDS_CACHE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:  # session already stopped
-            pass
-    return df
+
+def live_key(snapshot) -> LiveKey:
+    seg = snapshot.log_segment
+    return LiveKey(
+        snapshot.spark.sparkContext.applicationId,
+        snapshot.table_path,
+        snapshot.version,
+        seg.checkpoint_version,
+        len(seg.commit_files),
+    )
+
+
+def _live_entry(snapshot, table: pa.Table | None = None) -> _CacheEntry:
+    """The snapshot's cache entry. Its live files (pyreplay.FILES_SCHEMA)
+    are replayed once per cache lifetime, or installed from ``table``, a
+    live table the caller built for this snapshot (incremental refresh)."""
+    key = live_key(snapshot)
+    entry = _cache_get(key)
+    if entry is None:
+        if table is None:
+            table = live_files_arrow(snapshot.storage, snapshot.log_segment)
+        entry = _CacheEntry(table)
+        _cache_put(key, entry)
+    return entry
+
+
+def live_files_frame(snapshot, table: pa.Table | None = None) -> DataFrame:
+    """The snapshot's live files as the ``scan_files_df`` frame, lifted
+    once from its cached Arrow table (see :func:`_live_entry`)."""
+    entry = _live_entry(snapshot, table)
+    if entry.frame is None:
+        lifted = scan_files_arrow(entry.table, snapshot.table_path)
+        # not persisted: createDataFrame already holds the table in the JVM
+        # as Arrow batches, and a columnar cache copy costs more to build
+        # than re-reading them (1M adds: persist+count 5.5 s, count 0.8 s)
+        entry.frame = snapshot.spark.createDataFrame(lifted)
+    return entry.frame
+
+
+def live_entry_of(frame: DataFrame) -> tuple[LiveKey, pa.Table] | None:
+    """(key, Arrow table) of the snapshot entry whose lifted frame IS
+    ``frame`` — identity, not equality: a frame the caller derived or
+    built itself never matches."""
+    for key, entry in _LIVE_ADDS_CACHE.items():
+        if entry.frame is frame and entry.table is not None and isinstance(key, LiveKey):
+            return key, entry.table
+    return None
+
+
+def absolute_paths(paths: pa.Array, table_path: str) -> pa.Array:
+    """Arrow twin of :func:`resolve_add_path`: log paths percent-decoded
+    (``_unq``, the file identity) and rooted at the table unless already
+    absolute."""
+    paths = paths.combine_chunks() if isinstance(paths, pa.ChunkedArray) else paths
+    if pc.any(pc.match_substring(paths, "%")).as_py():
+        paths = pa.array([p if p is None else _unq(p) for p in paths.to_pylist()], pa.string())
+    rooted = pc.binary_join_element_wise(pa.scalar(table_path.rstrip("/") + "/"), paths, "")
+    return pc.if_else(
+        pc.match_substring(paths, "://"),
+        pc.replace_substring_regex(paths, "^file:/+", "/"),
+        pc.if_else(pc.starts_with(paths, "/"), paths, rooted),
+    )
+
+
+def scan_files_arrow(tbl: pa.Table, table_path: str) -> pa.Table:
+    """A live-files table (pyreplay.FILES_SCHEMA) in ``scan_files_df``'s
+    layout — the reference's scan-row schema (kernel/src/scan/
+    mod.rs:1410-1440): absolute path, size, mtime, stats, file constants,
+    DV descriptor, row-tracking fields, version of the carrying log file."""
+    order = ["path", "size", "modification_time", "stats", "partition_values", "dv"]
+    order += ["base_row_id", "default_row_commit_version", "commit_version"]
+    tbl = tbl.select([c for c in order if c in tbl.column_names])
+    names = [{"path": "file_path", "dv": "deletion_vector"}.get(c, c) for c in tbl.column_names]
+    paths = absolute_paths(tbl.column(0), table_path)
+    return tbl.rename_columns(names).set_column(0, "file_path", paths)
+
+
+def scan_files_table(files: list["ScanFile"]) -> pa.Table:
+    """ScanFile handles back in ``scan_files_df``'s layout, without the
+    plan-only mtime and stats."""
+    return pa.table(
+        {
+            "file_path": pa.array([f.path for f in files], pa.string()),
+            "size": pa.array([f.size for f in files], pa.int64()),
+            "partition_values": pa.array(
+                [list((f.partition_values or {}).items()) for f in files], FILES_SCHEMA.field("partition_values").type
+            ),
+            "deletion_vector": pa.array([f.dv for f in files], DV_TYPE),
+            "base_row_id": pa.array([f.base_row_id for f in files], pa.int64()),
+            "default_row_commit_version": pa.array([f.default_row_commit_version for f in files], pa.int64()),
+            "commit_version": pa.array([f.commit_version for f in files], pa.int64()),
+        }
+    )
+
+
+def scan_files_list(files: pa.Table) -> list["ScanFile"]:
+    """Scan-files rows (``scan_files_df``'s layout) as driver-side
+    ScanFile handles."""
+    names = ["file_path", "size", "partition_values", "deletion_vector"]
+    names += ["base_row_id", "commit_version", "default_row_commit_version"]
+    return [
+        ScanFile(path, size, dict(pv or ()), dv, brid, cv, drcv)
+        for path, size, pv, dv, brid, cv, drcv in zip(*(files.column(c).to_pylist() for c in names))
+    ]
 
 
 def dv_unique_id(dv_col: Column) -> Column:
@@ -141,26 +289,20 @@ def canonical_log_path(col: Column) -> Column:
     return _tolerant_url_decode(col)
 
 
-def absolutize_decoded_path(col: Column, table_path: str) -> Column:
-    """ALREADY-DECODED relative path → absolute path, in-plan. Absolute
-    inputs (URI or '/'-rooted) pass through undecorated with the table
-    root."""
-    return (
-        F.when(col.contains("://"), _strip_scheme(col))
-        .when(col.startswith("/"), col)
-        .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), col))
-    )
-
-
 def resolve_add_path(col: Column, table_path: str) -> Column:
     """Log-relative add/remove/cdc path → absolute path, in-plan.
 
     Delta log paths are RFC-2396 percent-encoded; ``F.url_decode`` is
     FORM decoding ('+' → space — a literal '+' in a partition value would
     mangle), so literal '+' is protected before decoding (see
-    :func:`canonical_log_path`). Shared by the scan, CDF, and incremental
-    replays."""
-    return absolutize_decoded_path(canonical_log_path(col), table_path)
+    :func:`canonical_log_path`). Used by the CDF replay; the Arrow twin
+    is :func:`absolute_paths`."""
+    decoded = canonical_log_path(col)
+    return (
+        F.when(decoded.contains("://"), _strip_scheme(decoded))
+        .when(decoded.startswith("/"), decoded)
+        .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), decoded))
+    )
 
 
 def _conform_struct(src_type: T.DataType, prefix: str, target: T.StructType) -> Column:
@@ -200,7 +342,8 @@ def resolved_checkpoint_df(spark, seg) -> DataFrame:
     V2 checkpoints store file actions in sidecar parquet files (reference
     kernel/src/checkpoint + log_segment/mod.rs:51-83); the top-level file
     then only carries metadata actions — readers must follow the sidecar
-    pointers. Shared by the scan and the checkpoint writer's replay.
+    pointers. Used by the checkpoint writer's replay and ``DeltaTable``;
+    scans read checkpoints through the Arrow replay (sources/pyreplay.py).
     """
     from delta_kernel_rs_spark.sources.actions import (
         ACTIONS_SCHEMA,
@@ -258,9 +401,9 @@ def checkpoint_top_df(spark, seg) -> DataFrame:
     only. JSON-flavored V2 tops (protocol spec; reference log_path.rs) are
     NDJSON at the full action schema; multipart parquet checkpoints may
     hold ONE action kind per part (reference parquet_row_group_skipping
-    fixture: disjoint columns), so part schemas merge. Shared by the scan
-    resolution and every non-file-action fold — the round-12 foreign-
-    checkpoint fuzz caught two folds reading tops with a bare
+    fixture: disjoint columns), so part schemas merge. Shared by the
+    checkpoint-file resolution and every non-file-action fold — the
+    round-12 foreign-checkpoint fuzz caught two folds reading tops with a bare
     ``spark.read.parquet``, which crashes on the json flavor.
     """
     from delta_kernel_rs_spark.sources.actions import ACTIONS_SCHEMA
@@ -326,15 +469,6 @@ class ScanFile:
     default_row_commit_version: int | None = None
 
 
-def file_constants_df(spark, files: list["ScanFile"]) -> DataFrame:
-    """(path → partition values) lookup built from a collected file list —
-    avoids re-running log replay just to fetch per-file constants."""
-    rows = [(f.path, f.partition_values or {}) for f in files]
-    return spark.createDataFrame(
-        rows, "__const_path STRING, __pv MAP<STRING,STRING>"
-    )
-
-
 class Scan:
     """A configured read of a snapshot (reference kernel/src/scan/mod.rs)."""
 
@@ -368,143 +502,30 @@ class Scan:
             )
 
     # ------------------------------------------------------------------
-    # Log replay → live adds
+    # Live files: the cached Arrow replay, and the frame lifted from it
     # ------------------------------------------------------------------
-    def _version_map_df(self) -> DataFrame:
-        """(log filename → version) lookup, built from the driver's listing.
+    def _replay_table(self) -> pa.Table | None:
+        """The Arrow live-file table this scan's file list IS, or None when
+        the list needs Spark: file skipping or key exclusion applies, or a
+        ``with_files_df`` override that no cached table backs."""
+        if self._exclude_keys_df is not None or self._skip_predicate is not None:
+            return None
+        if self._files_df_override is None:
+            return _live_entry(self.snapshot).table
+        hit = live_entry_of(self._files_df_override)
+        # its relative paths resolve against this scan's table root
+        return hit[1] if hit is not None and hit[0].table_path == self.snapshot.table_path else None
 
-        Compacted files carry the range end as their effective version (all
-        actions inside are already newest-wins-reconciled for the range).
-        """
-        seg = self.snapshot.log_segment
-        rows = [
-            (c.filename, c.end_version if c.end_version is not None else c.version)
-            for c in seg.commit_files
-        ]
-        return self.spark.createDataFrame(rows, "log_filename STRING, version LONG")
-
-    def cached_add_actions_df(self) -> DataFrame:
-        """Live adds with a per-(session, table, version) persisted cache.
-
-        The replay result for one snapshot is immutable, so every scan of
-        that snapshot (and every constants-join subtree inside one to_df
-        plan) can share a single persisted frame instead of re-running
-        replay per action — delta-spark's cached state-reconstruction
-        pattern. A small LRU bounds the cache; evictees are unpersisted.
-        """
-        seg = self.snapshot.log_segment
-        key = (
-            self.spark.sparkContext.applicationId,
-            self.snapshot.table_path,
-            self.snapshot.version,
-            seg.checkpoint_version,
-            len(seg.commit_files),
-        )
-        return cached_files_frame(key, self.add_actions_df)
-
-    def add_actions_df(self) -> DataFrame:
-        """Live ``add`` actions (+ commit version) after full replay."""
-        seg = self.snapshot.log_segment
-        spark = self.spark
-        commit_arm = None
-        if seg.commit_files:
-            raw = spark.read.schema(SCAN_ACTIONS_SCHEMA).option("mode", "FAILFAST").json(
-                [c.path for c in seg.commit_files]
-            )
-            commit_arm = (
-                raw.withColumn(
-                    "log_filename",
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-                )
-                .join(F.broadcast(self._version_map_df()), "log_filename")
-                .filter(F.col("add").isNotNull() | F.col("remove").isNotNull())
-                .select(
-                    # file identity is the DECODED path: a remove written
-                    # with a different percent-encoding than the add it
-                    # shadows must still match (canonical_log_path docstring)
-                    canonical_log_path(
-                        F.coalesce(F.col("add.path"), F.col("remove.path"))
-                    ).alias("key_path"),
-                    # dv_unique_id never returns NULL (missing DV → ""), so
-                    # pick the branch by which action is present.
-                    F.when(
-                        F.col("add").isNotNull(),
-                        dv_unique_id(F.col("add.deletionVector")),
-                    )
-                    .otherwise(dv_unique_id(F.col("remove.deletionVector")))
-                    .alias("key_dv"),
-                    "add",
-                    "version",
-                )
-            )
-
-        checkpoint_arm = None
-        if seg.checkpoint_parts:
-            ckpt = resolved_checkpoint_df(spark, seg)
-            if "add" in ckpt.columns:
-                checkpoint_arm = (
-                    ckpt.filter(F.col("add").isNotNull())
-                    .select(
-                        canonical_log_path(F.col("add.path")).alias("key_path"),
-                        dv_unique_id(F.col("add.deletionVector")).alias("key_dv"),
-                        "add",
-                        F.lit(seg.checkpoint_version).cast("long").alias("version"),
-                    )
-                )
-
-        if commit_arm is None and checkpoint_arm is None:
-            raise ValueError("empty log segment")
-
-        if commit_arm is not None:
-            # Newest-wins dedup: max_by(action, version) per file key; dead
-            # files (newest action is a remove) yield add IS NULL.
-            latest = (
-                commit_arm.groupBy("key_path", "key_dv")
-                .agg(F.max_by(F.struct("version", "add"), F.col("version")).alias("w"))
-                .select(
-                    "key_path",
-                    "key_dv",
-                    F.col("w.version").alias("version"),
-                    F.col("w.add").alias("add"),
-                )
-            )
-            live_commit_adds = latest.filter(F.col("add").isNotNull())
-            if checkpoint_arm is not None:
-                commit_keys = commit_arm.select("key_path", "key_dv").distinct()
-                checkpoint_live = checkpoint_arm.join(
-                    F.broadcast(commit_keys), ["key_path", "key_dv"], "left_anti"
-                )
-                return live_commit_adds.unionByName(checkpoint_live)
-            return live_commit_adds
-        return checkpoint_arm
-
-    # ------------------------------------------------------------------
-    # Scan-file DataFrame with resolved absolute paths
-    # ------------------------------------------------------------------
     def scan_files_df(self) -> DataFrame:
-        """One row per live file: absolute path + file-constant columns.
-
-        This is the reference's scan-row schema (kernel/src/scan/
-        mod.rs:1410-1440): path, size, modificationTime, stats, DV,
-        file constants.
-        """
+        """One row per live file in SCAN_FILES_SCHEMA (absolute path,
+        size, mtime, stats, file constants, DV, commit version). Without a
+        skipping predicate, exclusion keys or override it is the
+        snapshot's cached lifted frame itself."""
         if self._files_df_override is not None:
             df = self._files_df_override
         else:
-            table_path = self.snapshot.table_path
-            adds = self.cached_add_actions_df()
-            df = adds.select(
-                resolve_add_path(F.col("add.path"), table_path).alias("file_path"),
-                F.col("add.size").alias("size"),
-                F.col("add.modificationTime").alias("modification_time"),
-                F.col("add.stats").alias("stats"),
-                F.col("add.partitionValues").alias("partition_values"),
-                F.col("add.deletionVector").alias("deletion_vector"),
-                F.col("add.baseRowId").alias("base_row_id"),
-                F.col("add.defaultRowCommitVersion").alias("default_row_commit_version"),
-                F.col("version").alias("commit_version"),
-            )
-        skip_pred = self._file_skipping_predicate()
+            df = live_files_frame(self.snapshot)
+        skip_pred = self._skip_predicate
         if skip_pred is not None:
             df = df.filter(skip_pred)
         if self._exclude_keys_df is not None:
@@ -538,7 +559,8 @@ class Scan:
             F.coalesce(F.col("base_row_id"), F.lit(-1)).alias("x_brid"),
         )
 
-    def _file_skipping_predicate(self) -> Column | None:
+    @functools.cached_property
+    def _skip_predicate(self) -> Column | None:
         """Partition pruning + stats-based data skipping (plans/data_skipping)."""
         pred = self._parsed_predicate if self._parsed_predicate is not None else self.predicate
         if pred is None:
@@ -575,47 +597,32 @@ class Scan:
         return derived if keep is None else (keep & derived)
 
     def files(self) -> list[ScanFile]:
-        if self._files_cache is None:
+        if self._files_cache is not None:
+            return self._files_cache
+        tbl = self._replay_table()
+        if tbl is not None:
+            files = scan_files_arrow(tbl.drop_columns(["stats"]), self.snapshot.table_path)
+        else:
             # stats (multi-KB JSON per file) and mtime are plan-only columns
             # — never ship them to the driver; at a million files that is
             # the difference between MBs and GBs of driver heap.
-            rows = self.scan_files_df().drop("stats", "modification_time").collect()
-            self._files_cache = [
-                ScanFile(
-                    path=r.file_path,
-                    size=r.size,
-                    partition_values=dict(r.partition_values or {}),
-                    dv=r.deletion_vector.asDict() if r.deletion_vector else None,
-                    base_row_id=r.base_row_id,
-                    commit_version=r.commit_version,
-                    default_row_commit_version=r.default_row_commit_version,
-                )
-                for r in rows
-            ]
+            files = self.scan_files_df().drop("stats", "modification_time").toArrow()
+        self._files_cache = scan_files_list(files)
         return self._files_cache
 
-    def with_files_df(self, files_df: DataFrame, persist: bool = True) -> "Scan":
-        """Plan this scan off a caller-supplied scan-files frame instead of
-        log replay — the frame-shaped twin of assigning ``_files_cache``.
+    def with_files_df(self, files_df: DataFrame) -> "Scan":
+        """Plan this scan off a caller-supplied scan-files frame (e.g. a
+        ``Snapshot.scan_files_df_from`` refresh) instead of the snapshot's
+        own live files; skipping and exclusion keys still apply on top. A
+        snapshot's cached lifted frame plans from its Arrow table.
 
-        Used by the incremental refresh path (``scan_metadata_from``,
-        reference kernel/src/scan/mod.rs:880-1024): the merged
-        prior+diff frame flows straight into ``to_df()``'s distributed
-        planning; the driver never materializes the file list. The scan's
-        skipping predicate and exclusion keys still apply on top.
-
-        ``persist`` (default) spills the frame into the same bounded LRU
-        the live-adds cache uses: ``to_df()`` executes the scan-files
-        subtree several times (head collect, DV descriptors, constants),
-        and unlike the default path this frame has no persisted replay
-        underneath it — measured 2.4→2.0 s on the d03 incr arm at sf0.1.
-        A frame that is ALREADY persisted (e.g. the stable-key cached
-        merge from ``Snapshot.scan_files_df_from``) is used as-is — no
-        duplicate persist, no id()-keyed LRU churn. Evictees are
-        unpersisted by the LRU."""
+        A not-yet-persisted frame that no Arrow table backs is persisted in
+        the bounded LRU: ``to_df()`` executes the scan-files subtree several
+        times (head collect, DV descriptors, constants) — measured
+        2.4→2.0 s on the d03 incr arm at sf0.1."""
         from pyspark import StorageLevel
 
-        if persist and files_df.storageLevel == StorageLevel.NONE:
+        if files_df.storageLevel == StorageLevel.NONE and live_entry_of(files_df) is None:
             cached_files_frame(
                 ("files_df_override", self.snapshot.table_path, id(files_df)),
                 lambda: files_df,
@@ -716,12 +723,14 @@ class Scan:
     def to_df(self) -> DataFrame:
         """The scan result as a lazy logical DataFrame.
 
-        Planning is distributed by default: the only O(files) driver state
-        is the path-string list the parquet reader requires (plus one
-        has-DV bit per file) — file constants, DV descriptors, and row-id
-        constants stay in DataFrames joined executor-side. A scan whose
-        ``files()`` list was already materialized reuses that bounded
-        list; a ``with_files_df`` override plans off the supplied frame.
+        The only O(files) driver state is the path-string list the parquet
+        reader requires (plus one has-DV bit per file): file constants, DV
+        descriptors, and row-id constants stay in DataFrames joined
+        executor-side. Unfiltered, the list comes straight from the cached
+        Arrow replay (no Spark job); with file skipping or exclusion keys
+        it is one collect of (path, has_dv) pairs from the filtered frame.
+        A scan whose ``files()`` list was already materialized reuses that
+        bounded list.
         """
         spark = self.spark
         schema = self.snapshot.schema
@@ -729,16 +738,21 @@ class Scan:
         pcols = meta.partition_columns
 
         files = self._files_cache
+        tbl = self._replay_table() if files is None else None
         if files is not None:
             paths = [f.path for f in files]
             needs_dv = any(f.dv for f in files)
-            sfdf = None
+            sfdf = spark.createDataFrame(scan_files_table(files))
+        elif tbl is not None:
+            paths = absolute_paths(tbl.column("path"), self.snapshot.table_path).to_pylist()
+            needs_dv = tbl.column("dv").null_count < tbl.num_rows
+            sfdf = self.scan_files_df().drop("stats", "modification_time")
         else:
             # One collect of (path, has_dv) pairs only — never ScanFile
             # objects, stats JSON, or partition-value dicts (round-5
             # verdict, What's wrong #3). The frame sits on the snapshot's
-            # persisted live-adds cache, so the constants joins below
-            # reuse one replay instead of re-running it per action.
+            # lifted frame, so the constants joins below reuse it instead
+            # of re-planning the file list per action.
             sfdf = self.scan_files_df().drop("stats", "modification_time")
             head = sfdf.select(
                 "file_path", F.col("deletion_vector").isNotNull().alias("has_dv")
@@ -778,31 +792,21 @@ class Scan:
             # exists solely to drop DV-hidden rows — a DV-free snapshot
             # must not pay it (measured 1.4 s -> 0.6 s on the d07 lineage
             # arm's base-snapshot read, PLANS.md round 10)
-            from delta_kernel_rs_spark.functions.dv import (
-                deleted_rows_df,
-                deleted_rows_from_desc_df,
-            )
+            from delta_kernel_rs_spark.functions.dv import deleted_rows_from_desc_df
 
             # No broadcast hint: the deleted-row set is unbounded (billions
             # of rows on a heavily-deleted table) — let AQE pick the join.
-            if files is not None:
-                deleted = deleted_rows_df(spark, files, self.snapshot.table_path)
-            else:
-                desc_df = (
-                    sfdf.filter(F.col("deletion_vector").isNotNull())
-                    .select(
-                        F.col("file_path").alias("dv_file_path"),
-                        F.col("deletion_vector.storageType").alias("storage_type"),
-                        F.col("deletion_vector.pathOrInlineDv").alias(
-                            "path_or_inline"
-                        ),
-                        F.col("deletion_vector.offset").alias("offset"),
-                    )
-                    .repartition(64)
+            desc_df = (
+                sfdf.filter(F.col("deletion_vector").isNotNull())
+                .select(
+                    F.col("file_path").alias("dv_file_path"),
+                    F.col("deletion_vector.storageType").alias("storage_type"),
+                    F.col("deletion_vector.pathOrInlineDv").alias("path_or_inline"),
+                    F.col("deletion_vector.offset").alias("offset"),
                 )
-                deleted = deleted_rows_from_desc_df(
-                    desc_df, self.snapshot.table_path
-                )
+                .repartition(64)
+            )
+            deleted = deleted_rows_from_desc_df(desc_df, self.snapshot.table_path)
             df = df.join(
                 deleted,
                 (df["__file_path"] == deleted["dv_file_path"])
@@ -811,13 +815,10 @@ class Scan:
             )
 
         if pcols:
-            if files is not None:
-                const_df = file_constants_df(spark, files)
-            else:
-                const_df = sfdf.select(
-                    F.col("file_path").alias("__const_path"),
-                    F.col("partition_values").alias("__pv"),
-                )
+            const_df = sfdf.select(
+                F.col("file_path").alias("__const_path"),
+                F.col("partition_values").alias("__pv"),
+            )
             df = df.join(
                 maybe_broadcast(const_df),
                 df["__file_path"] == F.col("__const_path"),
@@ -841,20 +842,11 @@ class Scan:
             # add's defaultRowCommitVersion (reference row_tracking.rs +
             # transform_spec.rs:48-56 — materialized-column override would
             # coalesce in front of this once writes materialize it).
-            if files is not None:
-                row_consts = self.spark.createDataFrame(
-                    [
-                        (f.path, f.base_row_id, f.default_row_commit_version)
-                        for f in files
-                    ],
-                    "__rid_path STRING, __base_row_id LONG, __drcv LONG",
-                )
-            else:
-                row_consts = sfdf.select(
-                    F.col("file_path").alias("__rid_path"),
-                    F.col("base_row_id").alias("__base_row_id"),
-                    F.col("default_row_commit_version").alias("__drcv"),
-                )
+            row_consts = sfdf.select(
+                F.col("file_path").alias("__rid_path"),
+                F.col("base_row_id").alias("__base_row_id"),
+                F.col("default_row_commit_version").alias("__drcv"),
+            )
             df = df.join(
                 maybe_broadcast(row_consts),
                 df["__file_path"] == F.col("__rid_path"),

@@ -612,44 +612,31 @@ class Snapshot:
         return refresh_scan_files(self, base_version, prior_files)
 
     def scan_files_df_from(self, base_version: int, prior_df):
-        """Frame-shaped scan_metadata_from: merge a prior scan-files frame
-        with the (base, this] diff entirely in-plan — the columnar
-        prior-state handoff of the reference's scan_metadata_from
-        (kernel/src/scan/mod.rs:880-1024). Feed the result to
-        ``Scan.with_files_df``. None when the range is unservable.
+        """Frame-shaped scan_metadata_from (kernel/src/scan/mod.rs:880-1024):
+        the prior scan-files frame of version ``base_version`` advanced to
+        this snapshot. Feed the result to ``Scan.with_files_df``. None when
+        the range is unservable.
 
-        The merged frame for a fixed (table, base, target, prior plan) is
-        immutable, so it lands in the same stable-key LRU the live-adds
-        replay uses — a repeated refresh (dashboard poll, per-trigger
-        streaming plan, bench rerun) reuses ONE persisted merge instead of
-        re-running replay + anti-join each time. The prior frame's
-        Catalyst semantic hash pins the key to the prior PLAN, so a
-        different prior (e.g. predicate-filtered) can never alias."""
+        When ``prior_df`` IS the engine's own cached unfiltered frame for
+        ``(table, base)`` (what ``scan().scan_files_df()`` returns), the
+        base's cached Arrow table plus the replayed new commits become this
+        snapshot's cached live table, and its lifted frame is returned, so a
+        repeated refresh stays on this path. Any other prior (filtered, or
+        caller-built) is merged with the diff in-plan."""
         from delta_kernel_rs_spark.sources.incremental import (
+            refresh_live_files,
             refresh_scan_files_df,
         )
+        from delta_kernel_rs_spark.sources.scan import live_entry_of
 
-        merged = refresh_scan_files_df(self, base_version, prior_df)
-        if merged is None or merged is prior_df:
-            return merged
-        try:
-            sem = prior_df._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:  # internal API unavailable: skip cross-call reuse
-            return merged
-        from delta_kernel_rs_spark.sources.scan import cached_files_frame
-
-        seg = self.log_segment
-        key = (
-            "incr_merge",
-            self.spark.sparkContext.applicationId,
-            self.table_path,
-            base_version,
-            self.version,
-            seg.checkpoint_version,
-            len(seg.commit_files),
-            sem,
-        )
-        return cached_files_frame(key, lambda: merged)
+        hit = live_entry_of(prior_df) if base_version != self.version else None
+        if hit is not None:
+            key, table = hit
+            if key.table_path == self.table_path and key.version == base_version:
+                merged = refresh_live_files(self, base_version, key, table)
+                if merged is not None:
+                    return merged
+        return refresh_scan_files_df(self, base_version, prior_df)
 
     def timestamp_ms(self) -> int:
         """Commit timestamp of this snapshot's version (file mtime)."""

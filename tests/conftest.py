@@ -64,7 +64,8 @@ def pytest_collection_modifyitems(config, items):
         reason="default-fast set (SPARK_GRAFT_FULL_TESTS=1 to run)"
     )
     for item in items:
-        # nodeid is rootdir-relative; match on the file basename + test id
-        nid = item.nodeid.rsplit("/", 1)[-1]
-        if nid in skips:
+        # entries are full rootdir-relative nodeids: a basename match would
+        # also hit a same-named file elsewhere, and a "/" inside a
+        # parametrize id would cut the id
+        if item.nodeid in skips:
             item.add_marker(marker)

@@ -12,11 +12,13 @@ four shapes, struct layouts that omit optional fields, shuffled column
 orders, stats as JSON or as `stats_parsed` structs, remove tombstones.
 
 This fuzz writes checkpoints BY HAND with pyarrow/NDJSON — a foreign
-writer with none of this engine's conventions — and requires BOTH replay
-implementations (the distributed Spark fold via `Snapshot.files()` and
-the SparkSession-free Arrow fold via `live_files_arrow`) to agree exactly
-with a Python model of live files, through a handwritten commit tail that
-shadows, re-adds, and DV-swaps checkpointed files.
+writer with none of this engine's conventions — and requires the Arrow
+replay — through `Scan.files()` and bare `live_files_arrow` — to agree
+exactly with a Python model of live files, through a handwritten commit
+tail that shadows, re-adds, and DV-swaps checkpointed files. The
+distributed Spark fold (tests/replay_oracle.py, Spark's own parquet/JSON
+checkpoint readers) is a second oracle for `Scan.files()` and
+`scan_files_df()`, commit versions included.
 
 Layout randomization per checkpoint (one seeded rng drives everything):
 
@@ -45,6 +47,8 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+
+from tests.replay_oracle import assert_scan_matches_oracle
 
 SEEDS = [0xC4EC, 0x90D2]
 
@@ -475,9 +479,12 @@ def test_foreign_checkpoint_structural_fuzz(spark, tmp_path, seed):
 
         want = _model_view(live, partitioned)
         got_spark = _spark_view(spark, table, partitioned)
-        assert got_spark == want, f"[{flavor} seed={seed}] Spark replay diverged"
+        assert got_spark == want, f"[{flavor} seed={seed}] scan replay diverged"
         got_arrow = _pyreplay_view(table, partitioned)
         assert got_arrow == want, f"[{flavor} seed={seed}] Arrow replay diverged"
+        from delta_kernel_rs_spark.sources.snapshot import Snapshot
+
+        assert_scan_matches_oracle(Snapshot.create(spark, table))
 
         # the top's txn action must be visible to exactly-once consumers
         # in every flavor (json tops included — round-12 fix in pycommit)
@@ -566,3 +573,6 @@ def test_remove_only_sidecar_sorting_first_keeps_adds(spark, tmp_path, hint_mode
     want = _model_view(live, False)
     assert _spark_view(spark, table, False) == want, f"[hint={hint_mode}]"
     assert _pyreplay_view(table, False) == want, f"[hint={hint_mode}]"
+    from delta_kernel_rs_spark.sources.snapshot import Snapshot
+
+    assert_scan_matches_oracle(Snapshot.create(spark, table))

@@ -1,12 +1,10 @@
-"""Foreign-log twin-equivalence fuzz (round-10 fifth wave).
+"""Foreign-log replay fuzz (round-10 fifth wave).
 
-The engine has TWO independent log-replay implementations: the distributed
-Spark fold (sources/scan.py — every batch query) and the SparkSession-free
-Arrow fold (sources/pyreplay.py — the facade's planning and the streaming
-sources). Both must implement the reference's replay semantics
+Every scan plans from the single-node Arrow replay (sources/pyreplay.py),
+which must implement the reference's replay semantics
 (kernel/src/log_replay.rs — newest action per FileActionKey wins,
-checkpoint rows survive unless a tail action touched their key), and both
-must treat the PATH as file identity regardless of spelling
+checkpoint rows survive unless a tail action touched their key) and must
+treat the PATH as file identity regardless of spelling
 (canonical_log_path docstring; delta-spark leaves ``=`` raw where this
 engine percent-encodes it).
 
@@ -20,11 +18,13 @@ with none of this engine's write-path canonicalization:
 - DV swaps emit remove(old)+add(new) in one commit like real writers;
 - commitInfo junk rows are interleaved.
 
-A Python dict model (logical path -> latest file facts) is ground truth;
-the Spark replay, the Arrow replay, and — in the second test — the Spark
-replay THROUGH an engine-written checkpoint over the foreign tail must all
-agree with it exactly (path identity, size, DV descriptor, partition
-values).
+A Python dict model (logical path -> latest file facts) is ground truth
+for ``Scan.files()`` and the bare Arrow replay, in the second test also
+THROUGH an engine-written checkpoint over the foreign tail. The
+distributed Spark fold (tests/replay_oracle.py) is a second, independent
+oracle: ``Scan.files()`` and ``scan_files_df()`` must match it key for
+key, commit versions included, which also pins the Python path decoding
+against Spark's.
 
 No data files exist: replay is pure metadata, which keeps the fuzz fast
 and focused on the fold semantics.
@@ -40,6 +40,8 @@ import uuid
 import pytest
 
 from delta_kernel_rs_spark.functions.dv import encode_treemap, z85_encode
+from delta_kernel_rs_spark.sources.snapshot import Snapshot
+from tests.replay_oracle import assert_scan_matches_oracle
 
 SEED = 0xF0E1
 
@@ -261,9 +263,10 @@ def test_foreign_log_twin_equivalence(spark, tmp_path, partitioned):
         )
         want = _model_view(model, partitioned)
         got_spark = _spark_view(spark, table_path, partitioned)
-        assert got_spark == want, f"spark replay trial={trial}"
+        assert got_spark == want, f"scan replay trial={trial}"
         got_py = _pyreplay_view(table_path, partitioned)
         assert got_py == want, f"pyreplay trial={trial}"
+        assert_scan_matches_oracle(Snapshot.create(spark, table_path))
 
 
 def test_foreign_log_survives_engine_checkpoint(spark, tmp_path):
@@ -278,5 +281,6 @@ def test_foreign_log_survives_engine_checkpoint(spark, tmp_path):
     t = DeltaTable(spark, table_path)
     v = t.checkpoint()
     assert v == 20
-    assert _spark_view(spark, table_path, True) == want, "post-checkpoint spark"
+    assert _spark_view(spark, table_path, True) == want, "post-checkpoint scan"
     assert _pyreplay_view(table_path, True) == want, "post-checkpoint pyreplay"
+    assert_scan_matches_oracle(Snapshot.create(spark, table_path))

@@ -27,8 +27,18 @@ def table(spark, tmp_path):
 def test_incremental_reads_only_new_commits(spark, table):
     table.append(_ints(spark, 80, 100))  # v2
     snap = table.snapshot()
-    diff = snap.incremental_actions(1)
-    read = {p.rsplit("/", 1)[-1] for p in diff.inputFiles()}
+    read_text = snap.storage.read_text
+    read = set()
+
+    def spy(path):
+        read.add(path.rsplit("/", 1)[-1])
+        return read_text(path)
+
+    snap.storage.read_text = spy
+    try:
+        diff = snap.incremental_actions(1)
+    finally:
+        del snap.storage.read_text
     assert read == {f"{2:020d}.json"}  # only the post-base commit
     rows = diff.collect()
     assert all(r.action == "add" and r.commit_version == 2 for r in rows)
